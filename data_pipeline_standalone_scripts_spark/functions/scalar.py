@@ -313,7 +313,7 @@ def q_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The sibling q_boilerplate_ngrams kernel stays on Counter:
         # its arrow twin measured +76% at sf10 (Acero group_by over
         # millions of materialized 5-gram strings per batch loses to
-        # the C-speed Counter; tools/bench_arrow_kernels.py).
+        # the C-speed Counter; round-12 interleaved A/B).
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc

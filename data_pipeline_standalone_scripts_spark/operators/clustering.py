@@ -256,9 +256,12 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, (n, sd2, _s) in sorted(stats.items())
     ]
     return spark.createDataFrame(
-        # single slice: the default parallelize fans 8 rows over 32
-        # tasks and pays ~0.3 s of pure scheduling on every action
-        spark.sparkContext.parallelize(rows, 1),
+        # a pandas frame becomes a JVM LocalRelation (Arrow path): no
+        # Python RDD, so no Python task on every action of the result
+        pd.DataFrame(
+            rows,
+            columns=["cluster_id", "n_members", "inertia_micro2", "rms_dist"],
+        ),
         "cluster_id long, n_members long, inertia_micro2 long, rms_dist double",
     )
 
@@ -462,6 +465,11 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             w = gu @ vq  # exact int64 matvec (overflow bounds above)
             u = half_away(w.astype(np.float64) / 10000000000)
             nrm = np.sqrt(float((u * u).sum()))
+            if nrm == 0.0:
+                # degenerate corpus (e.g. all-equal embeddings): the
+                # divide gives NaN, which Spark's cast turns into 0
+                vq = np.zeros(d, dtype=np.int64)
+                continue
             vq = half_away(
                 w.astype(np.float64) / 10000000000 / nrm * 1000000
             )

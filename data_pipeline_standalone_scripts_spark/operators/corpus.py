@@ -95,7 +95,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1, −7% at sf1, but +76% at sf10 (5.88 vs 10.36 s median-of-7,
     interleaved) — Acero group_by over millions of materialized gram
     strings per batch loses to the C-speed Counter, so the Counter
-    kernel stays (tools/bench_arrow_kernels.py; q_explode/q_bm25_rank
+    kernel stays (round-12 interleaved A/B; q_explode/q_bm25_rank
     DID move to arrow, where it wins at every tier).
 
     Scale: the kernel is embarrassingly parallel per batch; partials

@@ -187,26 +187,28 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark twin of ``_WINNOW_CTE``. See q_fingerprint_winnow for the
     algorithm, encoding, and plan-shape notes.
 
-    r13 (VERDICT r12 #4, guide §4.2): the explode + codegen gram
-    encode + trailing-min window + distinct became ONE mapInArrow
-    numpy kernel — per doc: bytes → sliding 8-gram view · big-endian
-    byte powers (the exact integer conv(hex(gram),16,10) computes),
-    trailing window-min via a sliding view (+ a running-min head for
-    the first w−1 positions), keep gh == win_min, per-doc np.unique.
-    Each doc is ONE input row, so per-doc uniqueness IS global
-    uniqueness — the distinct disappears from the plan along with the
-    window sort. Value-pinned against the retained window formulation
-    (tests/test_round13_opt.py) and the unchanged oracle. Measured
-    (ABBA, tools/bench_r13_ab.py): sf0.1 0.51→0.46 s, sf1 2.59→1.03 s
-    toPandas; sf10 noop 12.7→2.6 s (row counts equal at 30,688,064).
+    One mapInArrow numpy kernel over each whole Arrow batch, reading
+    the string column's data buffer directly (no per-doc Python):
+    every 8-gram at every byte position as one int64 from eight
+    shifted ORs (big-endian bytes — the exact integer
+    conv(hex(gram),16,10) computes), the trailing window-min from
+    WINNOW_W − 1 shifted minimums masked at doc heads, keep grams that
+    equal their window-min at valid starts (no gram crossing a doc
+    end), then a pyarrow hash group_by dedups (row, fingerprint) and
+    the doc ids are taken by row. Each doc is ONE input row, so
+    per-row uniqueness IS global uniqueness — no distinct or window
+    sort in the plan. Value-pinned against the r12 explode + window
+    formulation (tests/test_round13_opt.py) and the unchanged oracle.
+
+    Degenerate inputs: null doc_id rows are dropped before the kernel
+    (the oracle's ``JOIN documents USING (doc_id)`` drops them too);
+    non-ASCII text raises ValueError naming the first offending
+    doc_id, since a multi-byte char would overflow the 8-byte gram.
     The single pre-explosion doc_id exchange (the parallelism crutch
-    for single-row-group local scans) is unchanged and still gated.
-    Non-ASCII text now raises in the kernel (ascii encode) instead of
-    silently overflowing the 8-byte budget — the documented ASCII
-    constraint made loud."""
+    for single-row-group local scans) is unchanged and still gated."""
     d = (
         load(spark, sf_dir, "documents")
-        .filter(F.length("text") >= K_GRAM)
+        .filter(F.col("doc_id").isNotNull() & (F.length("text") >= K_GRAM))
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "text")
     )
@@ -214,35 +216,43 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     def kern(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        # big-endian byte powers: gram-as-int64, identical to
-        # conv(hex(cast(gram AS BINARY)), 16, 10) for ASCII text
-        P = (256 ** np.arange(K_GRAM - 1, -1, -1)).astype(np.int64)
-        sw = np.lib.stride_tricks.sliding_window_view
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_i, out_f = [], []
-            for did, txt in zip(ids, texts):
-                b = np.frombuffer(txt.encode("ascii"), np.uint8).astype(
-                    np.int64
-                )
-                n = len(b) - K_GRAM + 1
-                gh = sw(b, K_GRAM) @ P
-                wm = np.empty(n, dtype=np.int64)
-                head = min(WINNOW_W - 1, n)
-                wm[:head] = np.minimum.accumulate(gh[:head])
-                if n >= WINNOW_W:
-                    wm[WINNOW_W - 1 :] = sw(gh, WINNOW_W).min(axis=1)
-                fps = np.unique(gh[gh == wm])
-                out_i.append(np.full(len(fps), did, dtype=np.int64))
-                out_f.append(fps)
-            if not out_i:
+            ids, text = batch.column(0), batch.column(1)
+            if len(text) == 0:
                 continue
+            bad = pc.not_equal(pc.binary_length(text), pc.utf8_length(text))
+            if pc.any(bad).as_py():
+                raise ValueError(
+                    f"winnow_fingerprints: doc_id {ids.filter(bad)[0]} has "
+                    "non-ASCII text; the 8-byte gram encoding needs ASCII"
+                )
+            large = pa.types.is_large_string(text.type)
+            _, obuf, dbuf = text.buffers()
+            off = np.frombuffer(obuf, np.int64 if large else np.int32)
+            off = off[text.offset : text.offset + len(text) + 1].astype(np.int64)
+            b = np.frombuffer(dbuf, np.uint8)[off[0] : off[-1]].astype(np.int64)
+            lens = np.diff(off)
+            m = len(b) - K_GRAM + 1
+            gh = b[:m] << 8 * (K_GRAM - 1)
+            for j in range(1, K_GRAM):
+                gh |= b[j : j + m] << 8 * (K_GRAM - 1 - j)
+            row = np.repeat(np.arange(len(lens)), lens)[:m]
+            pos = np.arange(m) - (off[:-1] - off[0])[row]
+            wm = gh.copy()
+            for k in range(1, WINNOW_W):
+                np.minimum(wm[k:], gh[:-k], out=wm[k:], where=pos[k:] >= k)
+            keep = (pos <= lens[row] - K_GRAM) & (gh == wm)
+            fps = (
+                pa.table({"row": row[keep], "fingerprint": gh[keep]})
+                .group_by(["row", "fingerprint"], use_threads=False)
+                .aggregate([])
+            )
             yield pa.record_batch(
                 [
-                    pa.array(np.concatenate(out_i)),
-                    pa.array(np.concatenate(out_f)),
+                    ids.take(fps.column("row").combine_chunks()),
+                    fps.column("fingerprint").combine_chunks(),
                 ],
                 names=["doc_id", "fingerprint"],
             )
@@ -284,8 +294,11 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: moving a document once is always cheaper than its grams.
     r13: the expansion itself moved from explode + codegen encode +
     trailing-min window + distinct into one mapInArrow numpy kernel —
-    see winnow_fingerprints for the mechanism and the measured
-    sf0.1/sf1/sf10 ABBA (0.90×/0.40×/0.21×).
+    see winnow_fingerprints for the mechanism (ABBA vs the window
+    plan at sf0.1/sf1/sf10: 0.90×/0.40×/0.21×). Its per-doc Python
+    loop later became whole-batch numpy: over all 50,000 sf1 docs,
+    single-threaded on a 4-core host, 2.30 s → 0.69 s for the same
+    3,049,001 rows.
 
     Formulation history: an all-higher-order variant (hash array +
     per-element slice/array_min, zero shuffle) was built and

@@ -3,8 +3,8 @@
 The driver owns the SparkSession it passes into ``entry``/``queries()``;
 we therefore split configuration in two tiers:
 
-- build-time conf (master, memory, AQE) — only applied when *we* create
-  the session (tests, bench);
+- build-time conf (master, memory, AQE, Python worker daemon) — only
+  applied when *we* create the session (tests, bench);
 - runtime conf (session timezone, ANSI) — safe to (re)apply on any
   session, which ``ensure_runtime_conf`` does idempotently. Correctness
   of timestamp queries vs the UTC-naive DuckDB oracle depends on the
@@ -88,6 +88,19 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half of physical RAM): the JVM heap plus the Python
+    workers must fit the host, or the kernel OOM-kills the JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(24 * 1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "24g"
+
+
 def get_spark(
     app_name: str = "dpss-spark",
     cpus: str | int | None = None,
@@ -95,16 +108,30 @@ def get_spark(
 ) -> SparkSession:
     """Local-mode session for tests/bench. local[N] = one JVM, N task
     threads; `spark.driver.memory` is the only memory knob that matters
-    in local mode."""
+    in local mode.
+
+    Python workers fork from ``worker_daemon`` instead of PySpark's
+    stock daemon (see that module). The daemon runs before any task has
+    delivered the shipped package zip, so the package's parent
+    directory goes on the workers' PYTHONPATH."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
+        .config(
+            "spark.python.daemon.module",
+            f"{os.path.basename(pkg_dir)}.worker_daemon",
+        )
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(pkg_dir))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
