@@ -380,8 +380,8 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     /1e10 → /nrm → *1e6 order, int64 matvec), so every integer and
     double is bit-identical — pinned doc-for-doc against the retained
     Column formulation in tests/test_round13_opt.py and by the
-    unchanged oracle. Measured (ABBA, toPandas protocol,
-    tools/bench_r13_ab.py): sf0.1 1.65→0.67 s, sf1 1.57→0.62 s,
+    unchanged oracle. Measured (round 13, ABBA, toPandas protocol):
+    sf0.1 1.65→0.67 s, sf1 1.57→0.62 s,
     sf10 11.6→7.5 s (contended epoch, candidate never lost a pair).
     Plan: 34 Exchanges → 2, 8 scans → 1, MapInPandas×2 → ×2 (one
     corpus kernel + one d²-row solver), zero broadcasts/windows.

@@ -27,6 +27,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    _parse_datatype_string,
+)
 
 DEC = "decimal(24,6)"
 
@@ -36,9 +43,9 @@ DEC = "decimal(24,6)"
 # when the caller finally acts on the frame). Without a ledger those
 # blocks live for the whole session and accumulate across a
 # registry-wide sweep. Every operator-held persist goes through
-# tracked_persist(); harnesses (bench.py, tools/check_parity,
-# __spark_entry__ consumers) call release_persists() after each
-# query's action. spark.catalog.clearCache() also works — this is the
+# tracked_persist(); harnesses (bench.py, tools/check_parity, the
+# tests' autouse fixture, __spark_entry__ consumers) call
+# release_persists() after each query's action. spark.catalog.clearCache() also works — this is the
 # targeted version that doesn't evict unrelated user caches.
 _LIVE_PERSISTS: list[DataFrame] = []
 
@@ -59,6 +66,66 @@ def release_persists() -> int:
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
     return n
+
+
+# --- the per-record Python kernel path ---------------------------------------
+# pandas nullable dtype per Spark integral type: a column mixing ints
+# and None stays exact instead of inferring float64 (2**60 + 1 survives)
+_NULLABLE_INTS = {
+    ByteType: "Int8",
+    ShortType: "Int16",
+    IntegerType: "Int32",
+    LongType: "Int64",
+}
+
+
+def map_records(df: DataFrame, fn, schema: str) -> DataFrame:
+    """Run a per-record Python kernel over ``df`` on ``mapInPandas``.
+
+    For every input row, ``fn(*row)`` is called with the row's values
+    in ``df.columns`` order and yields zero or more output tuples in
+    the column order of ``schema`` (a DDL string). This helper owns
+    everything around that: the Arrow batch loop, the output frame
+    (the schema's column names; an empty batch gives an empty frame),
+    exact nullable integer columns, and the error path — an exception from ``fn`` is
+    re-raised as ``ValueError("<first column>=<value>: <message>")``,
+    so a corrupt record fails the job naming its key (the first input
+    column is the record key at every call site).
+
+    Whole-batch vectorised kernels, whose speed comes from batch
+    math, and kernels that carry state across batches stay on
+    ``mapInPandas``/``mapInArrow`` directly."""
+    struct = _parse_datatype_string(schema)
+    names = struct.names
+    int_dtypes = {
+        f.name: _NULLABLE_INTS[type(f.dataType)]
+        for f in struct.fields
+        if type(f.dataType) in _NULLABLE_INTS
+    }
+    key = df.columns[0]
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                try:
+                    out.extend(fn(*row))
+                except Exception as e:
+                    raise ValueError(f"{key}={row[0]}: {e}") from e
+            cols = zip(*out, strict=True) if out else [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.array(c, dtype=int_dtypes[n])
+                    if n in int_dtypes
+                    else list(c)
+                    for n, c in zip(names, cols, strict=True)
+                },
+                columns=names,
+            )
+
+    return df.mapInPandas(run, schema=struct)
 
 
 def table_disk_bytes(sf_dir: str, table: str) -> int:

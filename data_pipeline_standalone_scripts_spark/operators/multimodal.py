@@ -2,9 +2,11 @@
 
 The media table (sources/multimodal.py) carries opaque ``binary``
 payloads; these operators run REAL byte-level decoding through
-``mapInPandas`` (Arrow batches of binary → pandas bytes objects →
-struct.unpack), and the DuckDB oracle independently recomputes the
-decoded fields arithmetically from ``documents`` — so the whole
+``map_records`` (operators/common.py: one per-record kernel over
+``mapInPandas`` — Arrow batches of binary → Python bytes →
+struct.unpack — whose errors name the failing ``media_id``), and
+the DuckDB oracle independently recomputes the decoded fields
+arithmetically from ``documents`` — so the whole
 binary round-trip (hex assembly → unhex → Arrow → Python bytes →
 parse) is T2 value-checked, not just row-counted.
 
@@ -19,58 +21,37 @@ only shuffle in either query is the final aggregate.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.multimodal import FPS, WAV_RATE, media_table, pgm_table, wav_table
+from .common import map_records
 
 CAT = "multimodal"
 
-_DECODE_SCHEMA = (
-    "media_id bigint, kind string, payload_len bigint, width bigint, height bigint, "
-    "n_frames bigint, digest_hex string"
+_PIXEL_STATS_SCHEMA = (
+    "media_id bigint, width bigint, height bigint, n_pixels bigint, px_sum bigint"
 )
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Parse the synthetic payload format batch-by-batch (Arrow)."""
-    for pdf in batches:
-        out = {
-            "media_id": pdf["media_id"],
-            "kind": pdf["kind"],
-            "payload_len": pdf["payload"].map(len),
-            "width": pd.array(
-                [
-                    struct.unpack(">I", p[0:4])[0] if k == "image" else None
-                    for p, k in zip(pdf["payload"], pdf["kind"])
-                ],
-                dtype="Int64",
-            ),
-            "height": pd.array(
-                [
-                    struct.unpack(">I", p[4:8])[0] if k == "image" else None
-                    for p, k in zip(pdf["payload"], pdf["kind"])
-                ],
-                dtype="Int64",
-            ),
-            "n_frames": pd.array(
-                [
-                    struct.unpack(">I", p[0:4])[0] if k == "video" else None
-                    for p, k in zip(pdf["payload"], pdf["kind"])
-                ],
-                dtype="Int64",
-            ),
-            "digest_hex": [
-                p[8:24].hex() if k == "image" else None
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ],
-        }
-        yield pd.DataFrame(out)
+def _px_mean() -> Column:
+    """Mean pixel value from a decoder's exact integer sum and count."""
+    return F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6)
+
+
+def _pixel_stats(decode_pixels):
+    """Per-record kernel over a grayscale codec: (media_id, width,
+    height, n_pixels, px_sum) of the decoded 2-D uint8 raster."""
+    import numpy as np
+
+    def kernel(mid, p):
+        img = decode_pixels(p)
+        h, w = img.shape
+        yield mid, w, h, w * h, int(img.astype(np.int64).sum())
+
+    return kernel
 
 
 @register(
@@ -91,22 +72,28 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode every media payload: byte-parse headers (width/height
     for images, frame count for videos) and the content digest, via
-    mapInPandas over the binary column. The oracle recomputes each
+    map_records over the binary column. The oracle recomputes each
     field arithmetically from documents — byte-level round-trip is
     therefore value-verified end-to-end."""
-    media = media_table(spark, sf_dir)
-    return (
-        media.select("media_id", "kind", "payload")
-        .mapInPandas(_decode_batches, schema=_DECODE_SCHEMA)
-        .select(
-            "media_id",
-            "kind",
-            "payload_len",
-            "width",
-            "height",
-            "n_frames",
-            "digest_hex",
+
+    def decode(mid, kind, p):
+        img = kind == "image"
+        yield (
+            mid,
+            kind,
+            len(p),
+            struct.unpack(">I", p[0:4])[0] if img else None,
+            struct.unpack(">I", p[4:8])[0] if img else None,
+            struct.unpack(">I", p[0:4])[0] if kind == "video" else None,
+            p[8:24].hex() if img else None,
         )
+
+    media = media_table(spark, sf_dir).select("media_id", "kind", "payload")
+    return map_records(
+        media,
+        decode,
+        "media_id bigint, kind string, payload_len bigint, width bigint, "
+        "height bigint, n_frames bigint, digest_hex string",
     )
 
 
@@ -152,49 +139,33 @@ def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "maxval", "n_pixels", "px_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p[0:2] != b"P5":
-                    raise ValueError(f"not a P5 PGM payload for media_id={mid}")
-                # netpbm header: magic, whitespace-separated w, h, maxval,
-                # single whitespace byte, then raw raster
-                fields, idx = [], 2
-                while len(fields) < 3:
-                    while p[idx : idx + 1].isspace():
-                        idx += 1
-                    start = idx
-                    while not p[idx : idx + 1].isspace():
-                        idx += 1
-                    fields.append(int(p[start:idx]))
-                idx += 1  # the single whitespace after maxval
-                w, h, maxval = fields
-                px = np.frombuffer(p, dtype=np.uint8, offset=idx)
-                if px.size != w * h:
-                    raise ValueError(f"raster size {px.size} != {w}x{h}")
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["maxval"].append(maxval)
-                rows["n_pixels"].append(w * h)
-                rows["px_sum"].append(int(px.astype(np.int64).sum()))
-            yield pd.DataFrame(rows)
+    def decode(mid, p):
+        if p[0:2] != b"P5":
+            raise ValueError("not a P5 PGM payload")
+        # netpbm header: magic, whitespace-separated w, h, maxval,
+        # single whitespace byte, then raw raster
+        fields, idx = [], 2
+        while len(fields) < 3:
+            while p[idx : idx + 1].isspace():
+                idx += 1
+            start = idx
+            while not p[idx : idx + 1].isspace():
+                idx += 1
+            fields.append(int(p[start:idx]))
+        idx += 1  # the single whitespace after maxval
+        w, h, maxval = fields
+        px = np.frombuffer(p, dtype=np.uint8, offset=idx)
+        if px.size != w * h:
+            raise ValueError(f"raster size {px.size} != {w}x{h}")
+        yield mid, w, h, maxval, w * h, int(px.astype(np.int64).sum())
 
-    decoded = pgm_table(spark, sf_dir).mapInPandas(
+    decoded = map_records(
+        pgm_table(spark, sf_dir),
         decode,
-        schema="media_id bigint, width bigint, height bigint, maxval bigint, "
+        "media_id bigint, width bigint, height bigint, maxval bigint, "
         "n_pixels bigint, px_sum bigint",
     )
-    return decoded.select(
-        "media_id",
-        "width",
-        "height",
-        "maxval",
-        "n_pixels",
-        "px_sum",
-        F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6).alias("px_mean"),
-    )
+    return decoded.withColumn("px_mean", _px_mean())
 
 
 @register(
@@ -236,46 +207,29 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "sample_rate", "bits", "n_samples", "sq_sum", "peak")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p[0:4] != b"RIFF" or p[8:12] != b"WAVE" or p[12:16] != b"fmt ":
-                    raise ValueError(f"not a RIFF/WAVE payload for media_id={mid}")
-                fmt_size, audio_fmt, channels, rate = _struct.unpack("<IHHI", p[16:28])
-                bits = _struct.unpack("<H", p[34:36])[0]
-                if (fmt_size, audio_fmt, channels) != (16, 1, 1):
-                    raise ValueError("unsupported WAV layout")
-                if p[36:40] != b"data":
-                    raise ValueError("missing data chunk")
-                data_len = _struct.unpack("<I", p[40:44])[0]
-                s = np.frombuffer(p, dtype="<i2", offset=44, count=data_len // 2).astype(
-                    np.int64
-                )
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["bits"].append(bits)
-                rows["n_samples"].append(s.size)
-                rows["sq_sum"].append(int((s * s).sum()))
-                rows["peak"].append(int(np.abs(s).max()))
-            yield pd.DataFrame(rows)
+    def decode(mid, p):
+        if p[0:4] != b"RIFF" or p[8:12] != b"WAVE" or p[12:16] != b"fmt ":
+            raise ValueError("not a RIFF/WAVE payload")
+        fmt_size, audio_fmt, channels, rate = _struct.unpack("<IHHI", p[16:28])
+        bits = _struct.unpack("<H", p[34:36])[0]
+        if (fmt_size, audio_fmt, channels) != (16, 1, 1):
+            raise ValueError("unsupported WAV layout")
+        if p[36:40] != b"data":
+            raise ValueError("missing data chunk")
+        data_len = _struct.unpack("<I", p[40:44])[0]
+        s = np.frombuffer(p, dtype="<i2", offset=44, count=data_len // 2).astype(
+            np.int64
+        )
+        yield mid, rate, bits, s.size, int((s * s).sum()), int(np.abs(s).max())
 
-    decoded = wav_table(spark, sf_dir).mapInPandas(
+    decoded = map_records(
+        wav_table(spark, sf_dir),
         decode,
-        schema="media_id bigint, sample_rate bigint, bits bigint, n_samples bigint, "
+        "media_id bigint, sample_rate bigint, bits bigint, n_samples bigint, "
         "sq_sum bigint, peak bigint",
     )
-    return decoded.select(
-        "media_id",
-        "sample_rate",
-        "bits",
-        "n_samples",
-        "sq_sum",
-        "peak",
-        F.round(F.sqrt(F.col("sq_sum").cast("double") / F.col("n_samples")), 6).alias(
-            "rms"
-        ),
-    )
+    rms = F.sqrt(F.col("sq_sum").cast("double") / F.col("n_samples"))
+    return decoded.withColumn("rms", F.round(rms, 6))
 
 
 SAMPLE_EVERY = 5
@@ -306,24 +260,16 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle at all — pure narrow pipeline.
     """
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, markers, fps = [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                n_frames, f = struct.unpack(">II", p[0:8])
-                for i in range(0, n_frames, SAMPLE_EVERY):
-                    marker = struct.unpack(">I", p[8 + 4 * i : 12 + 4 * i])[0]
-                    ids.append(mid)
-                    idxs.append(i)
-                    markers.append(marker)
-                    fps.append(f)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "marker": markers, "fps": fps}
-            )
+    def sample(mid, p):
+        n_frames, fps = struct.unpack(">II", p[0:8])
+        for i in range(0, n_frames, SAMPLE_EVERY):
+            yield mid, i, struct.unpack(">I", p[8 + 4 * i : 12 + 4 * i])[0], fps
 
     media = media_table(spark, sf_dir).filter(F.col("kind") == "video")
-    return media.select("media_id", "payload").mapInPandas(
-        sample, schema="media_id bigint, frame_idx long, marker long, fps int"
+    return map_records(
+        media.select("media_id", "payload"),
+        sample,
+        "media_id bigint, frame_idx long, marker long, fps int",
     )
 
 
@@ -358,27 +304,15 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor except as the (smaller) resized column.
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = {
-                "media_id": [],
-                "width": [],
-                "height": [],
-                "new_payload": [],
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                w, h = struct.unpack(">II", p[0:8])
-                new_p = struct.pack(">II", w // 2, h // 2) + p[8:]
-                out_rows["media_id"].append(mid)
-                out_rows["width"].append(w)
-                out_rows["height"].append(h)
-                out_rows["new_payload"].append(new_p)
-            yield pd.DataFrame(out_rows)
+    def resize(mid, p):
+        w, h = struct.unpack(">II", p[0:8])
+        yield mid, w, h, struct.pack(">II", w // 2, h // 2) + p[8:]
 
     media = media_table(spark, sf_dir).filter(F.col("kind") == "image")
-    resized = media.select("media_id", "payload").mapInPandas(
+    resized = map_records(
+        media.select("media_id", "payload"),
         resize,
-        schema="media_id bigint, width bigint, height bigint, new_payload binary",
+        "media_id bigint, width bigint, height bigint, new_payload binary",
     )
     # decode the RESIZED payload again — proves the rewrite landed at
     # the right byte offsets rather than trusting the writer
@@ -440,38 +374,14 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     map. The Sub filter unfilters via uint8-wrapping cumsum; Average/
     Paeth walk the row (spec-sequential left dependency).
     """
-    import numpy as np
-
     from ..sources.multimodal import png_decode_pixels, png_table
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "n_pixels", "px_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = png_decode_pixels(p)
-                h, w = img.shape
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["px_sum"].append(int(img.astype(np.int64).sum()))
-            yield pd.DataFrame(rows)
-
-    decoded = png_table(spark, sf_dir).mapInPandas(
-        decode,
-        schema="media_id bigint, width bigint, height bigint, "
-        "n_pixels bigint, px_sum bigint",
+    decoded = map_records(
+        png_table(spark, sf_dir),
+        _pixel_stats(png_decode_pixels),
+        _PIXEL_STATS_SCHEMA,
     )
-    return decoded.select(
-        "media_id",
-        "width",
-        "height",
-        "n_pixels",
-        "px_sum",
-        F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6).alias(
-            "px_mean"
-        ),
-    )
+    return decoded.withColumn("px_mean", _px_mean())
 
 
 @register(
@@ -512,63 +422,46 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless Arrow-batched narrow stage, per-record reduce in
     the Python worker, no shuffle.
     """
-    import struct
-
     import numpy as np
 
     from ..sources.multimodal import bmp_table
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "b_sum",
-                    "g_sum",
-                    "r_sum",
-                    "b_pos_checksum",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                magic, fsize, _, _, offset = struct.unpack_from("<2sIHHI", p, 0)
-                if magic != b"BM":
-                    raise ValueError(f"not a BMP for media_id={mid}")
-                (hsz, w, h, planes, bpp, comp) = struct.unpack_from(
-                    "<IiiHHI", p, 14
-                )[:6]
-                if hsz != 40 or planes != 1 or bpp != 24 or comp != 0:
-                    raise ValueError(f"unsupported BMP variant for {mid}")
-                row_bytes = w * 3
-                stride = row_bytes + ((-row_bytes) % 4)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for stored in range(h):
-                    logical = h - 1 - stored  # undo bottom-up storage
-                    start = offset + stored * stride
-                    img[logical] = np.frombuffer(
-                        p, dtype=np.uint8, count=row_bytes, offset=start
-                    ).reshape(w, 3)
-                b = img[:, :, 0].astype(np.int64)
-                weights = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                )
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["b_sum"].append(int(b.sum()))
-                rows["g_sum"].append(int(img[:, :, 1].astype(np.int64).sum()))
-                rows["r_sum"].append(int(img[:, :, 2].astype(np.int64).sum()))
-                rows["b_pos_checksum"].append(int((weights * b).sum()))
-            yield pd.DataFrame(rows)
+    def decode(mid, p):
+        magic, fsize, _, _, offset = struct.unpack_from("<2sIHHI", p, 0)
+        if magic != b"BM":
+            raise ValueError("not a BMP")
+        (hsz, w, h, planes, bpp, comp) = struct.unpack_from("<IiiHHI", p, 14)[:6]
+        if hsz != 40 or planes != 1 or bpp != 24 or comp != 0:
+            raise ValueError("unsupported BMP variant")
+        row_bytes = w * 3
+        stride = row_bytes + ((-row_bytes) % 4)
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        for stored in range(h):
+            logical = h - 1 - stored  # undo bottom-up storage
+            start = offset + stored * stride
+            img[logical] = np.frombuffer(
+                p, dtype=np.uint8, count=row_bytes, offset=start
+            ).reshape(w, 3)
+        b = img[:, :, 0].astype(np.int64)
+        weights = (
+            np.arange(h, dtype=np.int64)[:, None] * w
+            + np.arange(w, dtype=np.int64)[None, :]
+        )
+        yield (
+            mid,
+            w,
+            h,
+            w * h,
+            int(b.sum()),
+            int(img[:, :, 1].astype(np.int64).sum()),
+            int(img[:, :, 2].astype(np.int64).sum()),
+            int((weights * b).sum()),
+        )
 
-    return bmp_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        bmp_table(spark, sf_dir),
         decode,
-        schema="media_id bigint, width bigint, height bigint, "
+        "media_id bigint, width bigint, height bigint, "
         "n_pixels bigint, b_sum bigint, g_sum bigint, r_sum bigint, "
         "b_pos_checksum bigint",
     )
@@ -619,41 +512,14 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless Arrow-batched narrow stage, like the PNG/PGM/WAV
     decoders — parallelizes as a pure map at any corpus size.
     """
-    import numpy as np
-
     from ..sources.multimodal import jpeg_decode_pixels, jpeg_table
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in ("media_id", "width", "height", "n_pixels", "px_sum")
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = jpeg_decode_pixels(p)
-                h, w = img.shape
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["px_sum"].append(int(img.astype(np.int64).sum()))
-            yield pd.DataFrame(rows)
-
-    decoded = jpeg_table(spark, sf_dir).mapInPandas(
-        decode,
-        schema="media_id bigint, width bigint, height bigint, "
-        "n_pixels bigint, px_sum bigint",
+    decoded = map_records(
+        jpeg_table(spark, sf_dir),
+        _pixel_stats(jpeg_decode_pixels),
+        _PIXEL_STATS_SCHEMA,
     )
-    return decoded.select(
-        "media_id",
-        "width",
-        "height",
-        "n_pixels",
-        "px_sum",
-        F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6).alias(
-            "px_mean"
-        ),
-    )
+    return decoded.withColumn("px_mean", _px_mean())
 
 
 @register(
@@ -712,56 +578,23 @@ def q_avi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import avi_demux_mjpeg, avi_table, jpeg_decode_pixels
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "n_frames",
-                    "micro_sec_per_frame",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "px_sum",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                uspf, nf, w, h, frames = avi_demux_mjpeg(p)
-                px_sum = 0
-                for fb in frames:
-                    img = jpeg_decode_pixels(fb)
-                    if img.shape != (h, w):
-                        raise ValueError(
-                            f"avi: frame size {img.shape} != header {(h, w)}"
-                        )
-                    px_sum += int(img.astype(np.int64).sum())
-                rows["media_id"].append(mid)
-                rows["n_frames"].append(nf)
-                rows["micro_sec_per_frame"].append(uspf)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h * nf)
-                rows["px_sum"].append(px_sum)
-            yield pd.DataFrame(rows)
+    def decode(mid, p):
+        uspf, nf, w, h, frames = avi_demux_mjpeg(p)
+        px_sum = 0
+        for fb in frames:
+            img = jpeg_decode_pixels(fb)
+            if img.shape != (h, w):
+                raise ValueError(f"avi: frame size {img.shape} != header {(h, w)}")
+            px_sum += int(img.astype(np.int64).sum())
+        yield mid, nf, uspf, w, h, w * h * nf, px_sum
 
-    decoded = avi_table(spark, sf_dir).mapInPandas(
+    decoded = map_records(
+        avi_table(spark, sf_dir),
         decode,
-        schema="media_id bigint, n_frames bigint, micro_sec_per_frame bigint, "
+        "media_id bigint, n_frames bigint, micro_sec_per_frame bigint, "
         "width bigint, height bigint, n_pixels bigint, px_sum bigint",
     )
-    return decoded.select(
-        "media_id",
-        "n_frames",
-        "micro_sec_per_frame",
-        "width",
-        "height",
-        "n_pixels",
-        "px_sum",
-        F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6).alias(
-            "px_mean"
-        ),
-    )
+    return decoded.withColumn("px_mean", _px_mean())
 
 
 @register(
@@ -816,57 +649,30 @@ def q_fits_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "bitpix",
-                    "width",
-                    "height",
-                    "bzero",
-                    "object",
-                    "n_pixels",
-                    "px_sum",
-                    "px_max",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                hdr, phys = fits_parse(bytes(p))
-                h, w = phys.shape
-                pi = phys.astype(np.int64)
-                rows["media_id"].append(mid)
-                rows["bitpix"].append(int(hdr["BITPIX"]))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bzero"].append(int(float(hdr.get("BZERO", "0"))))
-                rows["object"].append(hdr.get("OBJECT", "").strip("' "))
-                rows["n_pixels"].append(w * h)
-                rows["px_sum"].append(int(pi.sum()))
-                rows["px_max"].append(int(pi.max()))
-            yield pd.DataFrame(rows)
+    def decode(mid, p):
+        hdr, phys = fits_parse(bytes(p))
+        h, w = phys.shape
+        pi = phys.astype(np.int64)
+        yield (
+            mid,
+            int(hdr["BITPIX"]),
+            w,
+            h,
+            int(float(hdr.get("BZERO", "0"))),
+            hdr.get("OBJECT", "").strip("' "),
+            w * h,
+            int(pi.sum()),
+            int(pi.max()),
+        )
 
-    decoded = fits_table(spark, sf_dir).mapInPandas(
+    decoded = map_records(
+        fits_table(spark, sf_dir),
         decode,
-        schema="media_id bigint, bitpix bigint, width bigint, height bigint, "
+        "media_id bigint, bitpix bigint, width bigint, height bigint, "
         "bzero bigint, object string, n_pixels bigint, px_sum bigint, "
         "px_max bigint",
     )
-    return decoded.select(
-        "media_id",
-        "bitpix",
-        "width",
-        "height",
-        "bzero",
-        "object",
-        "n_pixels",
-        "px_sum",
-        "px_max",
-        F.round(F.col("px_sum").cast("double") / F.col("n_pixels"), 6).alias(
-            "px_mean"
-        ),
-    )
+    return decoded.withColumn("px_mean", _px_mean())
 
 
 @register(
@@ -906,6 +712,8 @@ def q_fits_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     without any filesystem dependency; S3 q_sink_roundtrip covers the
     actual filesystem contract.
     """
+    import numpy as np
+
     from ..sources.multimodal import (
         FITS_BLOCK,
         fits_encode,
@@ -913,44 +721,24 @@ def q_fits_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         fits_table,
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def roundtrip(mid, p):
+        p = bytes(p)
+        hdr, phys = fits_parse(p)
+        p2 = fits_encode(hdr, phys)
+        hdr2, phys2 = fits_parse(p2)
+        yield (
+            mid,
+            len(p),
+            len(p2),
+            (len(p2) - FITS_BLOCK) // FITS_BLOCK,
+            int(hdr == hdr2),
+            int(phys.shape == phys2.shape and bool(np.array_equal(phys, phys2))),
+        )
 
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "n_bytes_in",
-                    "n_bytes_out",
-                    "data_blocks",
-                    "header_equal",
-                    "pixels_equal",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(p)
-                hdr, phys = fits_parse(p)
-                p2 = fits_encode(hdr, phys)
-                hdr2, phys2 = fits_parse(p2)
-                rows["media_id"].append(mid)
-                rows["n_bytes_in"].append(len(p))
-                rows["n_bytes_out"].append(len(p2))
-                rows["data_blocks"].append(
-                    (len(p2) - FITS_BLOCK) // FITS_BLOCK
-                )
-                rows["header_equal"].append(int(hdr == hdr2))
-                rows["pixels_equal"].append(
-                    int(
-                        phys.shape == phys2.shape
-                        and bool(np.array_equal(phys, phys2))
-                    )
-                )
-            yield pd.DataFrame(rows)
-
-    return fits_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        fits_table(spark, sf_dir),
         roundtrip,
-        schema="media_id bigint, n_bytes_in bigint, n_bytes_out bigint, "
+        "media_id bigint, n_bytes_in bigint, n_bytes_out bigint, "
         "data_blocks bigint, header_equal bigint, pixels_equal bigint",
     )
 
@@ -997,34 +785,23 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.multimodal import warc_record_fields_tolerant, warc_table
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "host", "content_length", "n_tokens", "rec_ok"]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for payload in pdf["payload"]:
-                for doc_id, host, body, ok in warc_record_fields_tolerant(
-                    bytes(payload)
-                ):
-                    rows["doc_id"].append(doc_id)
-                    rows["host"].append(host)
-                    # Content-Length is OCTETS per the WARC spec — the
-                    # oracle matches with strlen(text) (bytes), not
-                    # length(text) (chars), so non-ASCII corpora stay
-                    # parity-safe
-                    rows["content_length"].append(len(body))
-                    try:
-                        n_tok = len(body.decode("utf-8").split(" ")) if ok else 0
-                    except UnicodeDecodeError:
-                        # structurally valid record, non-text body —
-                        # flag it rather than crash the task
-                        n_tok, ok = 0, 0
-                    rows["n_tokens"].append(n_tok)
-                    rows["rec_ok"].append(ok)
-            yield pd.DataFrame(rows, columns=cols)
+    def extract(blob_id, payload):
+        for doc_id, host, body, ok in warc_record_fields_tolerant(bytes(payload)):
+            try:
+                n_tok = len(body.decode("utf-8").split(" ")) if ok else 0
+            except UnicodeDecodeError:
+                # structurally valid record, non-text body — flag it
+                # rather than crash the task
+                n_tok, ok = 0, 0
+            # Content-Length is OCTETS per the WARC spec — the oracle
+            # matches with strlen(text) (bytes), not length(text)
+            # (chars), so non-ASCII corpora stay parity-safe
+            yield doc_id, host, len(body), n_tok, ok
 
-    return warc_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        warc_table(spark, sf_dir),
         extract,
-        schema="doc_id bigint, host string, content_length bigint, "
+        "doc_id bigint, host string, content_length bigint, "
         "n_tokens bigint, rec_ok bigint",
     )
 
@@ -1097,19 +874,12 @@ def q_web_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.multimodal import warc_record_fields, warc_table
     from pyspark.sql.window import Window
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "host", "text"]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for payload in pdf["payload"]:
-                for doc_id, host, body in warc_record_fields(bytes(payload)):
-                    rows["doc_id"].append(doc_id)
-                    rows["host"].append(host)
-                    rows["text"].append(body.decode("utf-8"))
-            yield pd.DataFrame(rows, columns=cols)
+    def extract(blob_id, payload):
+        for doc_id, host, body in warc_record_fields(bytes(payload)):
+            yield doc_id, host, body.decode("utf-8")
 
-    recs = warc_table(spark, sf_dir).mapInPandas(
-        extract, schema="doc_id bigint, host string, text string"
+    recs = map_records(
+        warc_table(spark, sf_dir), extract, "doc_id bigint, host string, text string"
     )
     toks = F.split("text", " ")
     n_words = F.size(toks)
@@ -1207,31 +977,23 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         warc_table,
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "rec_len", "body_len", "rec_equal", "reparse_equal"]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for payload in pdf["payload"]:
-                for rec_bytes in warc_split_members(bytes(payload)):
-                    doc_id, host, body = _warc_fields(rec_bytes)
-                    re_enc = warc_record(doc_id, body)
-                    dec = zlib.decompressobj(47)
-                    gz_ok = (
-                        dec.decompress(warc_gz_member(re_enc)) + dec.flush()
-                        == re_enc
-                    )
-                    rows["doc_id"].append(doc_id)
-                    rows["rec_len"].append(len(rec_bytes))
-                    rows["body_len"].append(len(body))
-                    rows["rec_equal"].append(int(re_enc == rec_bytes))
-                    rows["reparse_equal"].append(
-                        int(_warc_fields(re_enc) == (doc_id, host, body)
-                            and gz_ok)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def roundtrip(blob_id, payload):
+        for rec_bytes in warc_split_members(bytes(payload)):
+            doc_id, host, body = _warc_fields(rec_bytes)
+            re_enc = warc_record(doc_id, body)
+            dec = zlib.decompressobj(47)
+            gz_ok = dec.decompress(warc_gz_member(re_enc)) + dec.flush() == re_enc
+            yield (
+                doc_id,
+                len(rec_bytes),
+                len(body),
+                int(re_enc == rec_bytes),
+                int(_warc_fields(re_enc) == (doc_id, host, body) and gz_ok),
+            )
 
-    return warc_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        warc_table(spark, sf_dir),
         roundtrip,
-        schema="doc_id bigint, rec_len bigint, body_len bigint, "
+        "doc_id bigint, rec_len bigint, body_len bigint, "
         "rec_equal bigint, reparse_equal bigint",
     )

@@ -39,14 +39,11 @@ union-find in q_connected_2d touches ~2 runs × h rows, not pixels².
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from .common import map_records
 
 CAT = "raster2d"
 
@@ -160,31 +157,16 @@ def q_tailcut_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "n_core", "n_rescued", "kept_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                rescued = boundary & ~core & nb_core
-                kept = core | rescued
-                rows["media_id"].append(mid)
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["kept_sum"].append(int(v[kept].sum()))
-            yield pd.DataFrame(rows)
+    def clean(mid, p):
+        _, phys = fits_parse(bytes(p))
+        v = phys.astype(np.int64)
+        core, rescued = tailcut_masks_2d(v, TAIL2D_HI, TAIL2D_LO)
+        yield mid, int(core.sum()), int(rescued.sum()), int(v[core | rescued].sum())
 
-    out = fits_table(spark, sf_dir).mapInPandas(
+    out = map_records(
+        fits_table(spark, sf_dir),
         clean,
-        schema="media_id bigint, n_core bigint, n_rescued bigint, kept_sum bigint",
+        "media_id bigint, n_core bigint, n_rescued bigint, kept_sum bigint",
     )
     n_kept = F.col("n_core") + F.col("n_rescued")
     return out.select(
@@ -198,6 +180,36 @@ def q_tailcut_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.when(n_kept > 0, n_kept).otherwise(F.lit(None)),
             6,
         ).alias("kept_mean"),
+    )
+
+
+def tailcut_masks_2d(v, hi: int, lo: int):
+    """(core, rescued) boolean masks of the two-threshold rescue rule
+    on a RECTANGULAR raster with the 8-neighborhood — the one copy the
+    2-D tailcut, Hillas and fused-pipeline kernels share (the hex twin
+    over an index-mapped neighbor list is tailcut_masks)."""
+    import numpy as np
+
+    core = v >= hi
+    nb_core = np.zeros_like(core)
+    for dy in (-1, 0, 1):
+        for dx in (-1, 0, 1):
+            if dx or dy:
+                nb_core |= _shift2d(core, dy, dx)
+    return core, (v >= lo) & ~core & nb_core
+
+
+def _weighted_moments(kv, a, b):
+    """Exact integer signal moments (S0, Sa, Sb, Saa, Sbb, Sab) of the
+    kept-pixel weights ``kv`` over coordinate arrays ``a``, ``b`` —
+    (x, y) on the rectangular grid, axial (q, r) on the hex camera."""
+    return (
+        int(kv.sum()),
+        int((a * kv).sum()),
+        int((b * kv).sum()),
+        int((a * a * kv).sum()),
+        int((b * b * kv).sum()),
+        int((a * b * kv).sum()),
     )
 
 
@@ -344,26 +356,15 @@ def q_tailcut_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     badj = spark.sparkContext.broadcast(hex_geometry_tables())
 
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "n_pix", "n_core", "n_rescued", "kept_sum")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx = badj.value[R][0]
-                n_core, n_rescued, kept_sum = tailcut_adjacency(
-                    v, nb_idx, TAIL2D_HI, TAIL2D_LO
-                )
-                rows["media_id"].append(mid)
-                rows["n_pix"].append(len(v))
-                rows["n_core"].append(n_core)
-                rows["n_rescued"].append(n_rescued)
-                rows["kept_sum"].append(kept_sum)
-            yield pd.DataFrame(rows, columns=list(cols))
+    def clean(mid, p):
+        R, v = hexcam_parse(bytes(p))
+        nb_idx = badj.value[R][0]
+        yield (mid, len(v), *tailcut_adjacency(v, nb_idx, TAIL2D_HI, TAIL2D_LO))
 
-    out = hexcam_table(spark, sf_dir).mapInPandas(
+    out = map_records(
+        hexcam_table(spark, sf_dir),
         clean,
-        schema="media_id bigint, n_pix bigint, n_core bigint, "
+        "media_id bigint, n_pix bigint, n_core bigint, "
         "n_rescued bigint, kept_sum bigint",
     )
     n_kept = F.col("n_core") + F.col("n_rescued")
@@ -473,91 +474,69 @@ def q_connected_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "n_islands",
-                    "n_isolated",
-                    "n_above",
-                    "kept_size",
-                    "kept_sum",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                mask = v >= CC2D_T
-                if not mask.any():
-                    continue
-                # union-find over horizontal runs (4-connectivity)
-                parent: list[int] = []
+    def clean(mid, p):
+        _, phys = fits_parse(bytes(p))
+        v = phys.astype(np.int64)
+        mask = v >= CC2D_T
+        if not mask.any():
+            return
+        # union-find over horizontal runs (4-connectivity)
+        parent: list[int] = []
 
-                def find(i: int) -> int:
-                    while parent[i] != i:
-                        parent[i] = parent[parent[i]]
-                        i = parent[i]
-                    return i
+        def find(i: int) -> int:
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
 
-                def union(a: int, b: int) -> None:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
+        def union(a: int, b: int) -> None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
 
-                runs: list[tuple[int, int, int, int, int]] = []  # y,x0,x1,sz,sig
-                prev_row: list[int] = []  # run ids in row y-1
-                h, _ = mask.shape
-                for y in range(h):
-                    idx = np.flatnonzero(mask[y])
-                    cur: list[int] = []
-                    if len(idx):
-                        # split idx into maximal consecutive runs
-                        brk = np.flatnonzero(np.diff(idx) > 1)
-                        starts = np.concatenate(([0], brk + 1))
-                        ends = np.concatenate((brk, [len(idx) - 1]))
-                        for s, e in zip(starts, ends):
-                            x0, x1 = int(idx[s]), int(idx[e])
-                            rid = len(runs)
-                            parent.append(rid)
-                            sig = int(v[y, x0 : x1 + 1].sum())
-                            runs.append((y, x0, x1, x1 - x0 + 1, sig))
-                            for pid in prev_row:
-                                py, px0, px1 = runs[pid][0], runs[pid][1], runs[pid][2]
-                                if px0 <= x1 and x0 <= px1:
-                                    union(rid, pid)
-                            cur.append(rid)
-                    prev_row = cur
-                comps: dict[int, list[int]] = {}
-                for rid, (y, x0, x1, sz, sig) in enumerate(runs):
-                    root = find(rid)
-                    st = comps.setdefault(root, [0, 0, 1 << 30])
-                    st[0] += sz
-                    st[1] += sig
-                    st[2] = min(st[2], y * 64 + x0)
-                islands = sorted(comps.values(), key=lambda s: (-s[1], s[2]))
-                rows["media_id"].append(mid)
-                rows["n_islands"].append(len(islands))
-                rows["n_isolated"].append(sum(1 for s in islands if s[0] == 1))
-                rows["n_above"].append(int(mask.sum()))
-                rows["kept_size"].append(islands[0][0])
-                rows["kept_sum"].append(islands[0][1])
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "n_islands",
-                    "n_isolated",
-                    "n_above",
-                    "kept_size",
-                    "kept_sum",
-                ],
-            )
+        runs: list[tuple[int, int, int, int, int]] = []  # y,x0,x1,sz,sig
+        prev_row: list[int] = []  # run ids in row y-1
+        h, _ = mask.shape
+        for y in range(h):
+            idx = np.flatnonzero(mask[y])
+            cur: list[int] = []
+            if len(idx):
+                # split idx into maximal consecutive runs
+                brk = np.flatnonzero(np.diff(idx) > 1)
+                starts = np.concatenate(([0], brk + 1))
+                ends = np.concatenate((brk, [len(idx) - 1]))
+                for s, e in zip(starts, ends):
+                    x0, x1 = int(idx[s]), int(idx[e])
+                    rid = len(runs)
+                    parent.append(rid)
+                    sig = int(v[y, x0 : x1 + 1].sum())
+                    runs.append((y, x0, x1, x1 - x0 + 1, sig))
+                    for pid in prev_row:
+                        px0, px1 = runs[pid][1], runs[pid][2]
+                        if px0 <= x1 and x0 <= px1:
+                            union(rid, pid)
+                    cur.append(rid)
+            prev_row = cur
+        comps: dict[int, list[int]] = {}
+        for rid, (y, x0, x1, sz, sig) in enumerate(runs):
+            st = comps.setdefault(find(rid), [0, 0, 1 << 30])
+            st[0] += sz
+            st[1] += sig
+            st[2] = min(st[2], y * 64 + x0)
+        islands = sorted(comps.values(), key=lambda s: (-s[1], s[2]))
+        yield (
+            mid,
+            len(islands),
+            sum(1 for s in islands if s[0] == 1),
+            int(mask.sum()),
+            islands[0][0],
+            islands[0][1],
+        )
 
-    return fits_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        fits_table(spark, sf_dir),
         clean,
-        schema="media_id bigint, n_islands bigint, n_isolated bigint, "
+        "media_id bigint, n_islands bigint, n_isolated bigint, "
         "n_above bigint, kept_size bigint, kept_sum bigint",
     )
 
@@ -717,31 +696,17 @@ def q_connected_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     badj = spark.sparkContext.broadcast(hex_geometry_tables())
 
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "media_id",
-            "n_islands",
-            "n_isolated",
-            "n_above",
-            "kept_size",
-            "kept_sum",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, _, _, key = badj.value[R]
-                got = connected_adjacency(v, nb_idx, CC2D_T, key)
-                if got is None:
-                    continue
-                rows["media_id"].append(mid)
-                for c, val in zip(cols[1:], got):
-                    rows[c].append(val)
-            yield pd.DataFrame(rows, columns=list(cols))
+    def clean(mid, p):
+        R, v = hexcam_parse(bytes(p))
+        nb_idx, _, _, key = badj.value[R]
+        got = connected_adjacency(v, nb_idx, CC2D_T, key)
+        if got is not None:
+            yield (mid, *got)
 
-    return hexcam_table(spark, sf_dir).mapInPandas(
+    return map_records(
+        hexcam_table(spark, sf_dir),
         clean,
-        schema="media_id bigint, n_islands bigint, n_isolated bigint, "
+        "media_id bigint, n_islands bigint, n_isolated bigint, "
         "n_above bigint, kept_size bigint, kept_sum bigint",
     )
 
@@ -894,32 +859,19 @@ def q_hillas_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bgeo = spark.sparkContext.broadcast(hex_geometry_tables())
 
-    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "n_kept", "s0", "sq", "sr", "sqq", "srr", "sqr"]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, qs, rs, _ = bgeo.value[R]
-                core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
-                kept = core | rescued
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_kept"].append(n_kept)
-                rows["s0"].append(int(kv.sum()))
-                rows["sq"].append(int((qs * kv).sum()))
-                rows["sr"].append(int((rs * kv).sum()))
-                rows["sqq"].append(int((qs * qs * kv).sum()))
-                rows["srr"].append(int((rs * rs * kv).sum()))
-                rows["sqr"].append(int((qs * rs * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
+    def moments(mid, p):
+        R, v = hexcam_parse(bytes(p))
+        nb_idx, qs, rs, _ = bgeo.value[R]
+        core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
+        kept = core | rescued
+        n_kept = int(kept.sum())
+        if n_kept >= 3:
+            yield (mid, n_kept, *_weighted_moments(np.where(kept, v, 0), qs, rs))
 
-    sums = hexcam_table(spark, sf_dir).mapInPandas(
+    sums = map_records(
+        hexcam_table(spark, sf_dir),
         moments,
-        schema="media_id bigint, n_kept bigint, s0 bigint, sq bigint, "
+        "media_id bigint, n_kept bigint, s0 bigint, sq bigint, "
         "sr bigint, sqq bigint, srr bigint, sqr bigint",
     )
     e = _hex_ellipse_exprs()
@@ -1033,6 +985,27 @@ def _b3_smooth2d(c, d: int):
     ) / 16
 
 
+def _atrous_bands(c0):
+    """Detail bands [w_1..w_L] and residual c_L of the L-level
+    separable B3 à-trous transform (dilations 1, 2, 4, …):
+    w_j = c_{j-1} - c_j."""
+    levels = [c0]
+    for j in range(ATROUS2D_LEVELS):
+        levels.append(_b3_smooth2d(levels[-1], 1 << j))
+    return [levels[j] - levels[j + 1] for j in range(ATROUS2D_LEVELS)], levels[-1]
+
+
+def _atrous_energies(c0, r):
+    """(n_pixels, energy_in, eout_micro) of an input raster c0 and its
+    reconstruction r: exact BIGINT Σc0², and Σr² in half-up micro-units
+    (the dsum discipline of common.py)."""
+    import numpy as np
+
+    vi = c0.astype(np.int64)
+    eout_micro = int(np.floor(r * r * 1e6 + 0.5).astype(np.int64).sum())
+    return c0.size, int((vi * vi).sum()), eout_micro
+
+
 @register("q_atrous_2d", oracle=_ATROUS2D_ORACLE, category=CAT)
 def q_atrous_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X60: TRUE 2-D à-trous wavelet filtering over real FITS rasters —
@@ -1073,46 +1046,20 @@ def q_atrous_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def filt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "n_pixels",
-                    "energy_in",
-                    "eout_micro",
-                    "n_zeroed",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                c0 = phys  # float64, exact integers
-                levels = [c0]
-                c = c0
-                for j in range(ATROUS2D_LEVELS):
-                    c = _b3_smooth2d(c, 1 << j)
-                    levels.append(c)
-                n_zeroed = 0
-                r = levels[-1]
-                for j in range(ATROUS2D_LEVELS):
-                    w = levels[j] - levels[j + 1]
-                    mask = np.abs(w) < ATROUS2D_T
-                    n_zeroed += int(mask.sum())
-                    r = r + np.where(mask, 0.0, w)
-                vi = c0.astype(np.int64)
-                r2 = r * r
-                eout_micro = int(np.floor(r2 * 1e6 + 0.5).astype(np.int64).sum())
-                rows["media_id"].append(mid)
-                rows["n_pixels"].append(c0.size)
-                rows["energy_in"].append(int((vi * vi).sum()))
-                rows["eout_micro"].append(eout_micro)
-                rows["n_zeroed"].append(n_zeroed)
-            yield pd.DataFrame(rows)
+    def filt(mid, p):
+        _, c0 = fits_parse(bytes(p))  # float64, exact integers
+        bands, r = _atrous_bands(c0)
+        n_zeroed = 0
+        for w in bands:
+            mask = np.abs(w) < ATROUS2D_T
+            n_zeroed += int(mask.sum())
+            r = r + np.where(mask, 0.0, w)
+        yield (mid, *_atrous_energies(c0, r), n_zeroed)
 
-    out = fits_table(spark, sf_dir).mapInPandas(
+    out = map_records(
+        fits_table(spark, sf_dir),
         filt,
-        schema="media_id bigint, n_pixels bigint, energy_in bigint, "
+        "media_id bigint, n_pixels bigint, energy_in bigint, "
         "eout_micro bigint, n_zeroed bigint",
     )
     energy_out = F.col("eout_micro").cast("double") / 1_000_000.0
@@ -1214,53 +1161,23 @@ def q_atrous_ksigma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def filt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = (
-                "media_id",
-                "n_pixels",
-                "mad1",
-                "mad2",
-                "mad3",
-                "energy_in",
-                "eout_micro",
-                "n_zeroed",
-            )
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                c0 = phys  # float64, exact integers
-                levels = [c0]
-                c = c0
-                for j in range(ATROUS2D_LEVELS):
-                    c = _b3_smooth2d(c, 1 << j)
-                    levels.append(c)
-                n_zeroed = 0
-                r = levels[-1]
-                mads = []
-                for j in range(ATROUS2D_LEVELS):
-                    w = levels[j] - levels[j + 1]
-                    mad = float(np.median(np.abs(w)))
-                    mads.append(mad)
-                    mask = np.abs(w) < ATROUS_KSIGMA_K * mad
-                    n_zeroed += int(mask.sum())
-                    r = r + np.where(mask, 0.0, w)
-                vi = c0.astype(np.int64)
-                r2 = r * r
-                eout_micro = int(np.floor(r2 * 1e6 + 0.5).astype(np.int64).sum())
-                rows["media_id"].append(mid)
-                rows["n_pixels"].append(c0.size)
-                rows["mad1"].append(mads[0])
-                rows["mad2"].append(mads[1])
-                rows["mad3"].append(mads[2])
-                rows["energy_in"].append(int((vi * vi).sum()))
-                rows["eout_micro"].append(eout_micro)
-                rows["n_zeroed"].append(n_zeroed)
-            yield pd.DataFrame(rows, columns=list(cols))
+    def filt(mid, p):
+        _, c0 = fits_parse(bytes(p))  # float64, exact integers
+        bands, r = _atrous_bands(c0)
+        n_zeroed, mads = 0, []
+        for w in bands:
+            mad = float(np.median(np.abs(w)))
+            mads.append(mad)
+            mask = np.abs(w) < ATROUS_KSIGMA_K * mad
+            n_zeroed += int(mask.sum())
+            r = r + np.where(mask, 0.0, w)
+        n_pixels, energy_in, eout_micro = _atrous_energies(c0, r)
+        yield (mid, n_pixels, *mads, energy_in, eout_micro, n_zeroed)
 
-    out = fits_table(spark, sf_dir).mapInPandas(
+    out = map_records(
+        fits_table(spark, sf_dir),
         filt,
-        schema="media_id bigint, n_pixels bigint, mad1 double, mad2 double, "
+        "media_id bigint, n_pixels bigint, mad1 double, mad2 double, "
         "mad3 double, energy_in bigint, eout_micro bigint, n_zeroed bigint",
     )
     energy_out = F.col("eout_micro").cast("double") / 1_000_000.0
@@ -1390,50 +1307,31 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "n_pixels", "e_in", "n_core", "n_rescued",
-            "s0", "sx", "sy", "sxx", "syy", "sxy", "e_kept",
-        ]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                rescued = boundary & ~core & nb_core
-                kept = core | rescued
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                h, w = v.shape
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_pixels"].append(v.size)
-                rows["e_in"].append(int((v * v).sum()))
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["s0"].append(int(kv.sum()))
-                rows["sx"].append(int((xs * kv).sum()))
-                rows["sy"].append(int((ys * kv).sum()))
-                rows["sxx"].append(int((xs * xs * kv).sum()))
-                rows["syy"].append(int((ys * ys * kv).sum()))
-                rows["sxy"].append(int((xs * ys * kv).sum()))
-                rows["e_kept"].append(int((kv * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
+    def kernel(mid, p):
+        _, phys = fits_parse(bytes(p))
+        v = phys.astype(np.int64)
+        core, rescued = tailcut_masks_2d(v, TAIL2D_HI, TAIL2D_LO)
+        kept = core | rescued
+        if int(kept.sum()) < 3:
+            return
+        h, w = v.shape
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        kv = np.where(kept, v, 0)
+        yield (
+            mid,
+            v.size,
+            int((v * v).sum()),
+            int(core.sum()),
+            int(rescued.sum()),
+            *_weighted_moments(kv, xs, ys),
+            int((kv * kv).sum()),
+        )
 
-    sums = fits_table(spark, sf_dir).mapInPandas(
+    sums = map_records(
+        fits_table(spark, sf_dir),
         kernel,
-        schema="media_id bigint, n_pixels bigint, e_in bigint, "
+        "media_id bigint, n_pixels bigint, e_in bigint, "
         "n_core bigint, n_rescued bigint, s0 bigint, sx bigint, "
         "sy bigint, sxx bigint, syy bigint, sxy bigint, e_kept bigint",
     )
@@ -1606,38 +1504,28 @@ def q_pipeline_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bgeo = spark.sparkContext.broadcast(hex_geometry_tables())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "n_pix", "e_in", "n_core", "n_rescued",
-            "s0", "sq", "sr", "sqq", "srr", "sqr", "e_kept",
-        ]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, qs, rs, _ = bgeo.value[R]
-                core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
-                kept = core | rescued
-                if int(kept.sum()) < 3:
-                    continue
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_pix"].append(len(v))
-                rows["e_in"].append(int((v * v).sum()))
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["s0"].append(int(kv.sum()))
-                rows["sq"].append(int((qs * kv).sum()))
-                rows["sr"].append(int((rs * kv).sum()))
-                rows["sqq"].append(int((qs * qs * kv).sum()))
-                rows["srr"].append(int((rs * rs * kv).sum()))
-                rows["sqr"].append(int((qs * rs * kv).sum()))
-                rows["e_kept"].append(int((kv * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
+    def kernel(mid, p):
+        R, v = hexcam_parse(bytes(p))
+        nb_idx, qs, rs, _ = bgeo.value[R]
+        core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
+        kept = core | rescued
+        if int(kept.sum()) < 3:
+            return
+        kv = np.where(kept, v, 0)
+        yield (
+            mid,
+            len(v),
+            int((v * v).sum()),
+            int(core.sum()),
+            int(rescued.sum()),
+            *_weighted_moments(kv, qs, rs),
+            int((kv * kv).sum()),
+        )
 
-    sums = hexcam_table(spark, sf_dir).mapInPandas(
+    sums = map_records(
+        hexcam_table(spark, sf_dir),
         kernel,
-        schema="media_id bigint, n_pix bigint, e_in bigint, "
+        "media_id bigint, n_pix bigint, e_in bigint, "
         "n_core bigint, n_rescued bigint, s0 bigint, sq bigint, "
         "sr bigint, sqq bigint, srr bigint, sqr bigint, e_kept bigint",
     )
@@ -1764,47 +1652,23 @@ def q_hillas_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.multimodal import fits_parse, fits_table
 
-    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in ("media_id", "n_kept", "s0", "sx", "sy", "sxx", "syy", "sxy")
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                kept = core | (boundary & nb_core)
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                h, w = v.shape
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_kept"].append(n_kept)
-                rows["s0"].append(int(kv.sum()))
-                rows["sx"].append(int((xs * kv).sum()))
-                rows["sy"].append(int((ys * kv).sum()))
-                rows["sxx"].append(int((xs * xs * kv).sum()))
-                rows["syy"].append(int((ys * ys * kv).sum()))
-                rows["sxy"].append(int((xs * ys * kv).sum()))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_kept", "s0", "sx", "sy", "sxx", "syy", "sxy"],
-            )
+    def moments(mid, p):
+        _, phys = fits_parse(bytes(p))
+        v = phys.astype(np.int64)
+        core, rescued = tailcut_masks_2d(v, TAIL2D_HI, TAIL2D_LO)
+        kept = core | rescued
+        n_kept = int(kept.sum())
+        if n_kept < 3:
+            return
+        h, w = v.shape
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        yield (mid, n_kept, *_weighted_moments(np.where(kept, v, 0), xs, ys))
 
-    sums = fits_table(spark, sf_dir).mapInPandas(
+    sums = map_records(
+        fits_table(spark, sf_dir),
         moments,
-        schema="media_id bigint, n_kept bigint, s0 bigint, sx bigint, "
+        "media_id bigint, n_kept bigint, s0 bigint, sx bigint, "
         "sy bigint, sxx bigint, syy bigint, sxy bigint",
     )
     s0d = F.col("s0").cast("double")

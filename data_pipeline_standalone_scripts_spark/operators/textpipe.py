@@ -558,8 +558,8 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly TWO corpus explodes by construction in every mode — and
     strictly less work even under AQE reuse. Value-pinned against the
     r12 three-broadcast formulation (tests/test_round13_opt.py) and
-    the unchanged oracle. Measured (ABBA, toPandas protocol,
-    tools/bench_r13_ab.py): sf0.1 1.02→0.93 s, sf1 1.11→0.96 s, sf10
+    the unchanged oracle. Measured (round 13, ABBA, toPandas
+    protocol): sf0.1 1.02→0.93 s, sf1 1.11→0.96 s, sf10
     4.40→4.35 s (wash inside noise — never loses a tier). At web-scale
     vocab the whole-frame V window becomes the same shuffle-agg the
     broadcast fallback already prescribes.

@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.common import map_records, scan_splits_hint
 from ..tables import load
 
 FPS = 24
@@ -112,26 +113,19 @@ def pgm_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     record), not just a header. Stateless per row — a narrow stage.
     """
     import numpy as np
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 64 + int(n_chars) % 64
-                h = 48 + int(doc_id) % 48
-                px = (
-                    np.arange(w, dtype=np.int64)[None, :]
-                    + 31 * np.arange(h, dtype=np.int64)[:, None]
-                    + 7 * int(doc_id)
-                ) % 256
-                payloads.append(
-                    b"P5\n%d %d\n255\n" % (w, h) + px.astype(np.uint8).tobytes()
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id, n_chars):
+        w = 64 + n_chars % 64
+        h = 48 + doc_id % 48
+        px = (
+            np.arange(w, dtype=np.int64)[None, :]
+            + 31 * np.arange(h, dtype=np.int64)[:, None]
+            + 7 * doc_id
+        ) % 256
+        yield doc_id, b"P5\n%d %d\n255\n" % (w, h) + px.astype(np.uint8).tobytes()
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 WAV_RATE = 8000
@@ -147,37 +141,32 @@ def wav_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as _struct
 
     import numpy as np
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = 800 + int(doc_id) % 800
-                i = np.arange(n, dtype=np.int64)
-                samples = ((7 * int(doc_id) + 13 * i) % 4001 - 2000).astype("<i2")
-                data = samples.tobytes()
-                header = _struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF",
-                    36 + len(data),
-                    b"WAVE",
-                    b"fmt ",
-                    16,
-                    1,  # PCM
-                    1,  # mono
-                    WAV_RATE,
-                    WAV_RATE * 2,
-                    2,
-                    16,
-                    b"data",
-                    len(data),
-                )
-                payloads.append(header + data)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        n = 800 + doc_id % 800
+        i = np.arange(n, dtype=np.int64)
+        samples = ((7 * doc_id + 13 * i) % 4001 - 2000).astype("<i2")
+        data = samples.tobytes()
+        header = _struct.pack(
+            "<4sI4s4sIHHIIHH4sI",
+            b"RIFF",
+            36 + len(data),
+            b"WAVE",
+            b"fmt ",
+            16,
+            1,  # PCM
+            1,  # mono
+            WAV_RATE,
+            WAV_RATE * 2,
+            2,
+            16,
+            b"data",
+            len(data),
+        )
+        yield doc_id, header + data
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 def png_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,27 +185,22 @@ def png_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verifies every DECODED pixel with no codec.
     """
     import numpy as np
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 48 + int(n_chars) % 80
-                h = 32 + int(doc_id) % 64
-                px = (
-                    (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 31 * np.arange(h, dtype=np.int64)[:, None]
-                        + 7 * int(doc_id)
-                    )
-                    % 256
-                ).astype(np.uint8)
-                payloads.append(png_encode(px))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id, n_chars):
+        w = 48 + n_chars % 80
+        h = 32 + doc_id % 64
+        px = (
+            (
+                np.arange(w, dtype=np.int64)[None, :]
+                + 31 * np.arange(h, dtype=np.int64)[:, None]
+                + 7 * doc_id
+            )
+            % 256
+        ).astype(np.uint8)
+        yield doc_id, png_encode(px)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 def png_encode(px: "object") -> bytes:
@@ -376,39 +360,31 @@ def bmp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
 
     import numpy as np
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d = int(doc_id)
-                w = 16 + int(n_chars) % 32
-                h = 12 + d % 24
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                b = (xs + 3 * ys + d) % 256
-                g = (2 * xs + 5 * ys + d) % 256
-                r = (xs + 7 * ys + 3 * d) % 256
-                px = np.stack([b, g, r], axis=2).astype(np.uint8)  # h,w,3 BGR
-                row_bytes = w * 3
-                pad = (-row_bytes) % 4
-                body = b"".join(
-                    px[y].tobytes() + b"\x00" * pad
-                    for y in range(h - 1, -1, -1)  # bottom-up storage
-                )
-                img_size = (row_bytes + pad) * h
-                info = struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-                )
-                file_hdr = struct.pack(
-                    "<2sIHHI", b"BM", 14 + 40 + img_size, 0, 0, 54
-                )
-                payloads.append(file_hdr + info + body)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(d, n_chars):
+        w = 16 + n_chars % 32
+        h = 12 + d % 24
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        b = (xs + 3 * ys + d) % 256
+        g = (2 * xs + 5 * ys + d) % 256
+        r = (xs + 7 * ys + 3 * d) % 256
+        px = np.stack([b, g, r], axis=2).astype(np.uint8)  # h,w,3 BGR
+        row_bytes = w * 3
+        pad = (-row_bytes) % 4
+        body = b"".join(
+            px[y].tobytes() + b"\x00" * pad
+            for y in range(h - 1, -1, -1)  # bottom-up storage
+        )
+        img_size = (row_bytes + pad) * h
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
+        )
+        file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + img_size, 0, 0, 54)
+        yield d, file_hdr + info + body
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 # ---------------------------------------------------------------- JPEG
@@ -543,27 +519,22 @@ def jpeg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     standards JPEG reader opens these; the flat-tile + Q₀₀=8 design
     makes decode exact so the oracle can verify pixels."""
     import numpy as np
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                tw = 6 + int(n_chars) % 10
-                th = 4 + int(doc_id) % 8
-                tiles = (
-                    (
-                        np.arange(tw, dtype=np.int64)[None, :]
-                        + 31 * np.arange(th, dtype=np.int64)[:, None]
-                        + 7 * int(doc_id)
-                    )
-                    % 256
-                ).astype(np.uint8)
-                payloads.append(jpeg_encode_tiles(tiles))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id, n_chars):
+        tw = 6 + n_chars % 10
+        th = 4 + doc_id % 8
+        tiles = (
+            (
+                np.arange(tw, dtype=np.int64)[None, :]
+                + 31 * np.arange(th, dtype=np.int64)[:, None]
+                + 7 * doc_id
+            )
+            % 256
+        ).astype(np.uint8)
+        yield doc_id, jpeg_encode_tiles(tiles)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 class _BitReader:
@@ -840,24 +811,18 @@ def avi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-shifted) in a RIFF AVI container with hdrl/movi/idx1.
     Fully arithmetic content, so q_avi_decode's oracle verifies the
     demuxed + decoded output with no codec library."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                nf = 3 + int(doc_id) % 6
-                frames = [
-                    jpeg_encode_tiles(_avi_frame_tiles(doc_id, n_chars, f))
-                    for f in range(nf)
-                ]
-                tiles0 = _avi_frame_tiles(doc_id, n_chars, 0)
-                th, tw = tiles0.shape
-                payloads.append(avi_encode_mjpeg(frames, 8 * tw, 8 * th))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id, n_chars):
+        nf = 3 + doc_id % 6
+        frames = [
+            jpeg_encode_tiles(_avi_frame_tiles(doc_id, n_chars, f))
+            for f in range(nf)
+        ]
+        th, tw = _avi_frame_tiles(doc_id, n_chars, 0).shape
+        yield doc_id, avi_encode_mjpeg(frames, 8 * tw, 8 * th)
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 def avi_demux_mjpeg(payload: bytes):
@@ -939,7 +904,6 @@ def fits_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row — a narrow stage.
     """
     import numpy as np
-    import pandas as pd
 
     def _card(key: str, val: str, comment: str = "") -> bytes:
         body = f"{key:<8}= {val:>20}"
@@ -947,37 +911,32 @@ def fits_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             body += f" / {comment}"
         return body.ljust(80)[:80].encode("ascii")
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w = 32 + n_chars % 32
-                h = 24 + doc_id % 24
-                phys = (
-                    3 * np.arange(w, dtype=np.int64)[None, :]
-                    + 17 * np.arange(h, dtype=np.int64)[:, None]
-                    + 11 * doc_id
-                ) % 4096
-                raw = (phys - FITS_BZERO).astype(">i2")
-                header = b"".join(
-                    [
-                        _card("SIMPLE", "T", "conforms to FITS standard"),
-                        _card("BITPIX", "16", "16-bit signed integers"),
-                        _card("NAXIS", "2"),
-                        _card("NAXIS1", str(w)),
-                        _card("NAXIS2", str(h)),
-                        _card("BZERO", str(FITS_BZERO), "unsigned short"),
-                        _card("BSCALE", "1"),
-                        _card("OBJECT", f"'DOC{doc_id}'", "source document"),
-                        "END".ljust(80).encode("ascii"),
-                    ]
-                )
-                header += b" " * (-len(header) % FITS_BLOCK)
-                data = raw.tobytes()
-                data += b"\x00" * (-len(data) % FITS_BLOCK)
-                payloads.append(header + data)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id, n_chars):
+        w = 32 + n_chars % 32
+        h = 24 + doc_id % 24
+        phys = (
+            3 * np.arange(w, dtype=np.int64)[None, :]
+            + 17 * np.arange(h, dtype=np.int64)[:, None]
+            + 11 * doc_id
+        ) % 4096
+        raw = (phys - FITS_BZERO).astype(">i2")
+        header = b"".join(
+            [
+                _card("SIMPLE", "T", "conforms to FITS standard"),
+                _card("BITPIX", "16", "16-bit signed integers"),
+                _card("NAXIS", "2"),
+                _card("NAXIS1", str(w)),
+                _card("NAXIS2", str(h)),
+                _card("BZERO", str(FITS_BZERO), "unsigned short"),
+                _card("BSCALE", "1"),
+                _card("OBJECT", f"'DOC{doc_id}'", "source document"),
+                "END".ljust(80).encode("ascii"),
+            ]
+        )
+        header += b" " * (-len(header) % FITS_BLOCK)
+        data = raw.tobytes()
+        data += b"\x00" * (-len(data) % FITS_BLOCK)
+        yield doc_id, header + data
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # Parallelism crutch (same contract as q_bpe_merge's): the FITS
@@ -986,12 +945,10 @@ def fits_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always has enough splits and this never fires. MEASURED at
     # sf0.1: 7.5 s median (spiky 1.1-14.2 s) on the 1-split scan vs
     # sub-second spread across 32.
-    from ..operators.common import scan_splits_hint
-
     par = spark.sparkContext.defaultParallelism
     if scan_splits_hint(spark, sf_dir, "documents") < par:
         d = d.repartition(par, "doc_id")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 def _fits_card_value(rest: str) -> str:
@@ -1334,39 +1291,25 @@ def hexcam_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Generation is a stateless Arrow-batched mapInPandas kernel (same
     shape as fits_table, same parallelism crutch)."""
     import numpy as np
-    import pandas as pd
 
     geos: dict[int, "np.ndarray"] = {}
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                R = 10 + doc_id % 6
-                if R not in geos:
-                    pts, _ = hex_geometry(R)
-                    geos[R] = np.array(pts, dtype=np.int64)
-                qr = geos[R]
-                v = (
-                    HEX_MQ * (qr[:, 0] + R)
-                    + HEX_MR * (qr[:, 1] + R)
-                    + 11 * doc_id
-                ) % 4096
-                payloads.append(
-                    HEXCAM_MAGIC
-                    + bytes([R])
-                    + v.astype(">u2").tobytes()
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def gen(doc_id):
+        R = 10 + doc_id % 6
+        if R not in geos:
+            pts, _ = hex_geometry(R)
+            geos[R] = np.array(pts, dtype=np.int64)
+        qr = geos[R]
+        v = (
+            HEX_MQ * (qr[:, 0] + R) + HEX_MR * (qr[:, 1] + R) + 11 * doc_id
+        ) % 4096
+        yield doc_id, HEXCAM_MAGIC + bytes([R]) + v.astype(">u2").tobytes()
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    from ..operators.common import scan_splits_hint
-
     par = spark.sparkContext.defaultParallelism
     if scan_splits_hint(spark, sf_dir, "documents") < par:
         d = d.repartition(par, "doc_id")
-    return d.mapInPandas(gen, schema="media_id bigint, payload binary")
+    return map_records(d, gen, "media_id bigint, payload binary")
 
 
 _HEX_GEO_TABLES: dict[int, tuple] = {}

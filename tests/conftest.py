@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_pipeline_standalone_scripts_spark.operators.common import release_persists
 from data_pipeline_standalone_scripts_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -26,3 +27,12 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_med():
     return SF_MED
+
+
+@pytest.fixture(autouse=True)
+def _release_persists():
+    """Unpersist every frame an operator cached during the test, so
+    cached blocks do not pile up in the shared session across the
+    suite's query runs."""
+    yield
+    release_persists()
